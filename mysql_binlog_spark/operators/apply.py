@@ -44,6 +44,10 @@ def filter_tables(
     Catalyst filter; the decode source additionally applies the same sets
     *inside* the decoder so excluded tables never pay row-decode cost
     (the reference's pushdown, see sources/binlog.py).
+
+    Do not apply it to a decode pruned with ``read_binlog(null_cols=...)``:
+    there ``schema_name``/``table_name`` are NULL, so every row would be
+    dropped.  Filter such a decode in the kernel (its include/exclude).
     """
     key = F.concat_ws(".", F.col("schema_name"), F.col("table_name"))
     if include is not None:
@@ -120,30 +124,40 @@ def _lsn_struct(df: DataFrame):
     return F.struct(*[F.col(c) for c in LSN_COLS if c in df.columns])
 
 
+def resolve_lsn(
+    df: DataFrame,
+    key_cols: list[str],
+    value_cols: list[str],
+) -> DataFrame:
+    """Per-key last-LSN winner: one row per key — key columns, the
+    winning row's ``value_cols``, then its LSN columns.  The one winner
+    rule of the apply path (``last_writer`` over events, the lake
+    table's merge/read/compaction over stored rows).
+
+    groupBy(key).agg(max_by(values, lsn)) — partial-aggregated map-side,
+    single shuffle keyed on the merge key.
+    """
+    values = F.struct(*[F.col(c).alias(c) for c in value_cols])
+    lsn = _lsn_struct(df)
+    win = df.groupBy(*key_cols).agg(
+        F.max_by(values, lsn).alias("_win"), F.max(lsn).alias("_lsn")
+    )
+    return win.select(
+        *key_cols,
+        *[F.col(f"_win.{c}").alias(c) for c in value_cols],
+        *[F.col(f"_lsn.{c}").alias(c) for c in LSN_COLS if c in df.columns],
+    )
+
+
 def last_writer(
     df: DataFrame,
     key_cols: list[str],
     payload_cols: list[str],
 ) -> DataFrame:
     """Per-key last-LSN winner: one row per key carrying the winning event's
-    action + payload (north-rule A1 second half).
-
-    groupBy(key).agg(max_by(payload, lsn)) — partial-aggregated map-side,
-    single shuffle keyed on the merge key so the output is already
-    co-partitioned for the merge join.
-    """
-    payload = F.struct(F.col("action").alias("action"),
-                       *[F.col(c).alias(c) for c in payload_cols])
-    lsn = _lsn_struct(df)
-    win = df.groupBy(*key_cols).agg(
-        F.max_by(payload, lsn).alias("_win"), F.max(lsn).alias("_lsn")
-    )
-    return win.select(
-        *key_cols,
-        F.col("_win.action").alias("action"),
-        *[F.col(f"_win.{c}").alias(c) for c in payload_cols],
-        *[F.col(f"_lsn.{c}").alias(c) for c in LSN_COLS if c in df.columns],
-    )
+    action + payload (north-rule A1 second half).  The output is already
+    co-partitioned on the merge key for the merge join."""
+    return resolve_lsn(df, key_cols, ["action"] + payload_cols)
 
 
 def salted_last_writer(

@@ -162,12 +162,6 @@ META_COLS = [
 NULLABLE_META = frozenset({"event_ts", "schema_name", "table_name", "gtid"})
 
 
-def _load_binary(spark: SparkSession, paths: str | list[str]) -> DataFrame:
-    if isinstance(paths, str):
-        return spark.read.format("binaryFile").load(paths)
-    return spark.read.format("binaryFile").load(paths)
-
-
 def _local_path(path: str) -> str:
     if path.startswith("file:"):
         path = path[5:]
@@ -332,11 +326,8 @@ def read_binlog(
     start_lsn: tuple[str, int] | None = None,
     start_after_gtid: tuple[str, int] | dict[str, int] | None = None,
     verify_crc: bool = False,
-    files_df: DataFrame | None = None,
     before_mode: str = "full",
-    task_side_read: bool = True,
     tolerate_truncation: bool = False,
-    vectorize: bool = True,
     on_error: str = "raise",
     null_cols: frozenset[str] | set[str] | None = None,
 ) -> DataFrame:
@@ -353,14 +344,13 @@ def read_binlog(
     ``before_*`` / ``after_*`` image columns.  ``image_cols`` defaults to
     the union discovered from TABLE_MAP frames of the included tables.
 
-    ``task_side_read``: open the chunk inside the Python task instead of
-    shipping its bytes through the JVM scan + Arrow IPC (the content is
-    the whole data volume — reading it task-side halves the decode path's
-    data movement).  Requires chunks readable from every worker (local FS
-    here; NFS/fuse mounts on a cluster — set False to route bytes through
-    Spark's Hadoop FS layer instead).
+    Each task opens its chunks itself instead of shipping their bytes
+    through the JVM scan + Arrow IPC (the content is the whole data
+    volume — reading it task-side halves the decode path's data
+    movement), so chunks must be readable from every worker (local FS;
+    NFS/fuse mounts on a cluster).
 
-    ``vectorize``: use the offset-scan kernels + numpy/Arrow column
+    Chunks decode with the offset-scan kernels + numpy/Arrow column
     gathers when every included table's stored columns allow it (decided
     per chunk from a TABLE_MAP pre-scan; chunks with decimal / rendered
     temporal / ENUM / latin1 / FLOAT columns fall back to the compiled
@@ -401,47 +391,37 @@ def read_binlog(
     ddl = decoded_schema_ddl(image_cols)
     ts_cols = {n for n, t in image_cols if t == "timestamp"}
 
-    if files_df is not None:
-        files = files_df
-    elif task_side_read:
-        # path-list fast path: tasks read chunk bytes themselves, so the
-        # JVM binaryFile source would only contribute its (expensive)
-        # Hadoop file listing — ~40% of decode wall time at bench scale.
-        # Driver-side glob + an even repartition replaces it.
-        import glob as _glob
+    # path list, not the JVM binaryFile source: tasks read chunk bytes
+    # themselves, so binaryFile would only contribute its (expensive)
+    # Hadoop file listing — ~40% of decode wall time at bench scale.
+    # Driver-side glob + an even repartition replaces it.
+    import glob as _glob
 
-        if isinstance(chunk_glob, list):
-            paths = sorted(chunk_glob)
-        else:
-            local = chunk_glob
-            if local.startswith("file:"):
-                local = local[5:]
-                if local.startswith("//"):
-                    local = local[local.index("/", 2):]
-            paths = sorted(_glob.glob(local))
-        # slice policy: every Python-runner task costs ~15-30ms of
-        # dispatch, so aim for ≥64MB of chunk bytes per task, floored at
-        # one wave (defaultParallelism) and capped at one file per task —
-        # at cluster scale (GB-sized chunks) this degenerates to
-        # one-task-per-file, at bench scale it avoids paying the task
-        # floor 3x over.  (Round 7 note: a 2-wave floor was measured and
-        # REJECTED — interleaved quiet-box A/B put one wave at 1.98s vs
-        # 2.32s for two waves on the 1200-chunk decode; extra waves only
-        # helped under external load, where the freed cores mask noise.)
-        total_bytes = 0
-        for p in paths:
-            try:
-                total_bytes += os.path.getsize(p)
-            except OSError:
-                pass
-        cores = spark.sparkContext.defaultParallelism
-        n_slices = max(1, min(
-            len(paths),
-            max(cores, -(-total_bytes // (64 * 1024 * 1024))),
-        ))
-        files = _paths_df(spark, paths, n_slices)
+    if isinstance(chunk_glob, list):
+        paths = sorted(chunk_glob)
     else:
-        files = _load_binary(spark, chunk_glob)
+        paths = sorted(_glob.glob(_local_path(chunk_glob)))
+    # slice policy: every Python-runner task costs ~15-30ms of
+    # dispatch, so aim for ≥64MB of chunk bytes per task, floored at
+    # one wave (defaultParallelism) and capped at one file per task —
+    # at cluster scale (GB-sized chunks) this degenerates to
+    # one-task-per-file, at bench scale it avoids paying the task
+    # floor 3x over.  (Round 7 note: a 2-wave floor was measured and
+    # REJECTED — interleaved quiet-box A/B put one wave at 1.98s vs
+    # 2.32s for two waves on the 1200-chunk decode; extra waves only
+    # helped under external load, where the freed cores mask noise.)
+    total_bytes = 0
+    for p in paths:
+        try:
+            total_bytes += os.path.getsize(p)
+        except OSError:
+            pass
+    cores = spark.sparkContext.defaultParallelism
+    n_slices = max(1, min(
+        len(paths),
+        max(cores, -(-total_bytes // (64 * 1024 * 1024))),
+    ))
+    files = _paths_df(spark, paths, n_slices)
     if start_lsn is not None:
         # file-level pruning before any decode (reference's start-pos skip,
         # EventsIterator.php:207-215, lifted to scan pruning)
@@ -466,36 +446,22 @@ def read_binlog(
 
         for rb in it:
             paths = rb.column(rb.schema.get_field_index("path")).to_pylist()
-            if not task_side_read:
-                contents = rb.column(rb.schema.get_field_index("content"))
-            for row_i, path in enumerate(paths):
+            for path in paths:
                 name = os.path.basename(path)
                 sp = start_pos if name == start_file else 0
-                if task_side_read:
-                    local = path
-                    if local.startswith("file:"):
-                        local = local[5:]
-                        if local.startswith("//"):  # file://host/...
-                            local = local[local.index("/", 2):]
-                    with open(local, "rb") as fh:
-                        data = fh.read()
-                else:
-                    data = contents[row_i].as_py()
+                with open(_local_path(path), "rb") as fh:
+                    data = fh.read()
                 try:
-                    batch, kinds = (
-                        decode_chunk_vectorized(
-                            data,
-                            image_cols=col_names,
-                            include=include,
-                            exclude=exclude,
-                            start_pos=sp,
-                            verify_crc=verify_crc,
-                            before_mode=before_mode,
-                            tolerate_truncation=tolerate_truncation,
-                            start_after_gtid=start_after_gtid,
-                        )
-                        if vectorize
-                        else (None, None)
+                    batch, kinds = decode_chunk_vectorized(
+                        data,
+                        image_cols=col_names,
+                        include=include,
+                        exclude=exclude,
+                        start_pos=sp,
+                        verify_crc=verify_crc,
+                        before_mode=before_mode,
+                        tolerate_truncation=tolerate_truncation,
+                        start_after_gtid=start_after_gtid,
                     )
                     if batch is None:
                         batch = decode_chunk(
@@ -570,8 +536,7 @@ def read_binlog(
                             names.append(f"{side}_{c}")
                 yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    cols_in = ["path"] if task_side_read else ["path", "content"]
-    return files.select(*cols_in).mapInArrow(decode, schema=ddl)
+    return files.mapInArrow(decode, schema=ddl)
 
 
 def image_view(df: DataFrame, image_cols: list[str]) -> DataFrame:

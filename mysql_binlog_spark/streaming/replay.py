@@ -21,17 +21,16 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.apply import last_writer
-from ..sources.binlog import image_view, read_binlog
+from ..sources.binlog import NULLABLE_META, image_view, read_binlog
 from ..table import LakeTable
 
 # Meta columns the apply path provably never reads (winners carry only
 # key + payload + LSN + action; lineage reads log_file/log_pos):
 # read_binlog emits them as all-NULL — same schema, ~300 MB less Arrow
 # IPC + JVM row conversion per 5.8 M events (guide §4).
-_PRUNED_META = frozenset({"event_ts", "schema_name", "table_name", "gtid"})
+_PRUNED_META = NULLABLE_META
 
 
 @dataclass
@@ -43,45 +42,44 @@ class ReplayStats:
         return sum(1 for e in self.epochs if not e.get("skipped"))
 
 
-def _epoch_winners(
+def prepare_epoch(
+    spark: SparkSession,
     table: LakeTable,
-    decoded,
-    include: list | None,
-    image_cols: list[str],
+    paths: list[str],
+    image_cols: list[tuple[str, str]] | None = None,
+    include: list | None = None,
     exclude: list | None = None,
+    **read_opts,
 ):
-    """The table-state-INDEPENDENT half of an epoch: decode (which
-    already applied the include/exclude filter IN-KERNEL — both replay
-    drivers build ``decoded`` with the same sets, so a second
-    ``filter_tables`` here would only re-test schema_name/table_name on
-    rows the kernel already admitted; round 7 removes it, which also
-    lets the decode null those columns, see ``read_binlog(null_cols)``)
-    → image → per-key winners.  Safe to run ahead of the previous
-    epoch's merge/commit (see replay_batch's one-deep pipeline)."""
-    df = decoded
+    """The table-state-INDEPENDENT half of an epoch: decode the chunk
+    files → effective row image → per-key winners, ready for
+    ``table.merge_into``.  ``read_opts`` go to ``read_binlog``; the
+    include/exclude table filter is applied there, IN-KERNEL, so the
+    decode may null schema_name/table_name (``_PRUNED_META``).  Safe to
+    run ahead of the previous epoch's merge/commit (see replay_batch's
+    one-deep pipeline)."""
+    decoded = read_binlog(
+        spark, paths, image_cols=image_cols,
+        include=set(include) if include is not None else None,
+        exclude=set(exclude) if exclude is not None else None,
+        before_mode="delete_only",  # apply never reads update befores
+        null_cols=_PRUNED_META,  # apply never reads these either
+        **read_opts,
+    )
+    cols = (
+        [n for n, _ in image_cols]
+        if image_cols
+        else [f.name[len("after_"):] for f in decoded.schema.fields
+              if f.name.startswith("after_")]
+    )
     # NB: no dedup_lsn stage here — exact re-deliveries share both LSN and
     # payload, so max_by in last_writer picks an identical row either way;
     # an explicit dropDuplicates would only add a second full-width shuffle.
     # (dedup_lsn remains a standalone operator for stats/count paths.)
-    df = image_view(df, image_cols)
     return last_writer(
-        df, key_cols=table.key_cols,
-        payload_cols=[c for c in image_cols if c not in table.key_cols],
+        image_view(decoded, cols), key_cols=table.key_cols,
+        payload_cols=[c for c in cols if c not in table.key_cols],
     )
-
-
-def _apply_epoch(
-    spark: SparkSession,
-    table: LakeTable,
-    decoded,
-    epoch_id: str,
-    include: list | None,
-    image_cols: list[str],
-    exclude: list | None = None,
-    merge_mode: str = "cow",
-) -> dict:
-    winners = _epoch_winners(table, decoded, include, image_cols, exclude)
-    return table.merge_into(spark, winners, epoch_id, mode=merge_mode)
 
 
 def replay_batch(
@@ -144,8 +142,6 @@ def replay_batch(
     )
     if start_lsn is not None:
         chunks = [f for f in chunks if f >= start_lsn[0]]
-    include_set = set(include) if include is not None else None
-    exclude_set = set(exclude) if exclude is not None else None
     stats = ReplayStats()
     done = table.committed_epochs()
     groups = [
@@ -163,8 +159,8 @@ def replay_batch(
     todo = [(eid, g) for eid, g, skipped in plan if not skipped]
 
     def prepare(group, materialize: bool = True):
-        """Build the epoch's winners plan (decode → filter → image →
-        last_writer) — every bit of it independent of table state.
+        """Build the epoch's winners plan (``prepare_epoch``) — every
+        bit of it independent of table state.
 
         ``materialize=True`` (the PREFETCHED epoch) persists + counts so
         the work runs while the PREVIOUS epoch merges/commits.
@@ -173,22 +169,12 @@ def replay_batch(
         single-pass path (MOR / initial load) then runs decode → winners
         → write as ONE job instead of paying a full cache
         materialization first."""
-        paths = [os.path.join(chunk_dir, f) for f in group]
-        decoded = read_binlog(
-            spark, paths, image_cols=image_cols, include=include_set,
-            exclude=exclude_set, start_lsn=start_lsn,
-            start_after_gtid=start_after_gtid,
-            before_mode="delete_only",  # apply never reads update befores
+        w = prepare_epoch(
+            spark, table, [os.path.join(chunk_dir, f) for f in group],
+            image_cols, include=include, exclude=exclude,
+            start_lsn=start_lsn, start_after_gtid=start_after_gtid,
             on_error=on_error, verify_crc=verify_crc,
-            null_cols=_PRUNED_META,  # apply never reads these either
         )
-        cols = (
-            [n for n, _ in image_cols]
-            if image_cols
-            else [f.name[len("after_"):] for f in decoded.schema.fields
-                  if f.name.startswith("after_")]
-        )
-        w = _epoch_winners(table, decoded, include, cols, exclude)
         if materialize:
             w = w.persist()
             w.count()
@@ -269,10 +255,13 @@ def replay_stream(
     ``merge_mode='mor'`` applies each micro-batch as merge-on-read
     deltas — the low-latency ingest shape (tiny triggers no longer pay a
     bucket rewrite); ``maintain_every`` bounds the read fan-in.
+
+    ``maintain_every`` counts the epochs applied within ONE call: the
+    count starts at zero on every call, so a caller that drains one
+    chunk per call (a tail loop) never reaches it and must run
+    ``table.maintain`` itself.
     """
     stats = ReplayStats()
-    include_set = set(include) if include is not None else None
-    exclude_set = set(exclude) if exclude is not None else None
 
     # file-reference stream: one row per chunk file
     refs = (
@@ -293,23 +282,14 @@ def replay_stream(
         if not paths:
             return
         epoch_id = f"stream-{batch_id}-{os.path.basename(sorted(paths)[0])}"
-        decoded = read_binlog(
-            spark, paths, image_cols=image_cols, include=include_set,
-            exclude=exclude_set, start_lsn=start_lsn,
-            start_after_gtid=start_after_gtid,
-            before_mode="delete_only",  # apply never reads update befores
-            on_error=on_error, verify_crc=verify_crc,
-            null_cols=_PRUNED_META,  # apply never reads these either
-        )
-        cols = (
-            [n for n, _ in image_cols]
-            if image_cols
-            else [f.name[len("after_"):] for f in decoded.schema.fields
-                  if f.name.startswith("after_")]
+        winners = prepare_epoch(
+            spark, table, paths, image_cols, include=include,
+            exclude=exclude, start_lsn=start_lsn,
+            start_after_gtid=start_after_gtid, on_error=on_error,
+            verify_crc=verify_crc,
         )
         stats.epochs.append(
-            _apply_epoch(spark, table, decoded, epoch_id, include, cols,
-                         exclude, merge_mode=merge_mode)
+            table.merge_into(spark, winners, epoch_id, mode=merge_mode)
         )
         if maintain_every and stats.applied % maintain_every == 0:
             table.maintain(spark)

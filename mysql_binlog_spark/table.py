@@ -27,9 +27,9 @@ cannot double-apply (north-rule A6).  Crash after data write but before the
 manifest rename leaves unreferenced orphans only.
 
 Cross-epoch correctness: every row stores its applied LSN; the merge winner
-per key is ``max_by(payload, lsn)`` over {current row} ∪ {updates}, so a
-late epoch replaying *older* events can never regress a newer row
-(last-writer-wins is global, not per-batch).
+per key is the max-LSN row (``resolve_lsn``) over {current row} ∪
+{updates}, so a late epoch replaying *older* events can never regress a
+newer row (last-writer-wins is global, not per-batch).
 
 If a real Iceberg catalog is available, this class is the only swap point.
 """
@@ -45,15 +45,11 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.apply import LSN_COLS, resolve_lsn
+
 _UNSET = object()  # last_commit cache sentinel ("no commits yet" is cachable)
 
-LSN_FIELDS = [
-    ("log_file", "string"),
-    ("log_pos", "bigint"),
-    ("batch_seq", "int"),
-    ("server_id", "bigint"),
-]
-LSN_COLS = [n for n, _ in LSN_FIELDS]
+LSN_FIELDS = list(zip(LSN_COLS, ["string", "bigint", "int", "bigint"]))
 
 
 class LakeTable:
@@ -201,26 +197,14 @@ class LakeTable:
         return out
 
     def live_files(self, buckets: set[int] | None = None) -> list[str]:
-        last = self.last_commit()
-        if not last:
-            return []
-        files: list[str] = []
-        for b, fs in last["buckets"].items():
-            if buckets is None or int(b) in buckets:
-                files.extend(fs)
-        return files
+        return self._doc_files(self.last_commit() or {}, "buckets", buckets)
 
     def delta_files(self, buckets: set[int] | None = None) -> list[str]:
         """Merge-on-read delta files (``merge_into(mode='mor')``) not yet
         folded into the base by compaction."""
-        last = self.last_commit()
-        if not last:
-            return []
-        files: list[str] = []
-        for b, fs in last.get("delta_buckets", {}).items():
-            if buckets is None or int(b) in buckets:
-                files.extend(fs)
-        return files
+        return self._doc_files(
+            self.last_commit() or {}, "delta_buckets", buckets
+        )
 
     def _commit(self, doc: dict) -> None:
         if self._next_seq is None:
@@ -252,6 +236,14 @@ class LakeTable:
                 files.extend(fs)
         return files
 
+    def _resolve(self, df: DataFrame) -> DataFrame:
+        """Per-key winners over stored rows (tombstones included)."""
+        key = self.key_cols
+        return resolve_lsn(
+            df, key,
+            ["_deleted"] + [n for n, _ in self.columns() if n not in key],
+        )
+
     def snapshot_df(
         self,
         spark: SparkSession,
@@ -263,7 +255,7 @@ class LakeTable:
 
         With merge-on-read deltas outstanding (``merge_into(mode='mor')``
         since the last compaction), the read resolves per-key winners
-        across base + delta rows with the SAME max_by-over-LSN reduce the
+        across base + delta rows with the SAME reduce (``resolve_lsn``) the
         copy-on-write merge uses — read-side merge work traded for the
         write-side amplification MOR avoids (BENCH/MERGE.md two-regime
         analysis).
@@ -306,21 +298,7 @@ class LakeTable:
             # data), mirroring selective compaction's discipline
             touched = {int(b) for b in last.get("delta_buckets", {})}
             tfiles = self._doc_files(last, "buckets", touched) + deltas
-            cols = [n for n, _ in self.columns()]
-            payload = F.struct(
-                F.col("_deleted").alias("_deleted"),
-                *[F.col(n).alias(n) for n in cols],
-            )
-            lsn = F.struct(*[F.col(n) for n in LSN_COLS])
-            df = (
-                spark.read.schema(schema).parquet(*tfiles)
-                .groupBy(*self.key_cols)
-                .agg(F.max_by(payload, lsn).alias("_w"), F.max(lsn).alias("_lsn"))
-                .select(
-                    *[F.col(f"_w.{n}").alias(n) for n in ["_deleted"] + cols],
-                    *[F.col(f"_lsn.{n}").alias(n) for n in LSN_COLS],
-                )
-            )
+            df = self._resolve(spark.read.schema(schema).parquet(*tfiles))
             n_buckets = self.schema_doc()["n_buckets"]
             ufiles = self._doc_files(
                 last, "buckets", set(range(n_buckets)) - touched
@@ -334,10 +312,9 @@ class LakeTable:
             if not files:
                 return spark.createDataFrame([], self.ddl(with_lsn=with_lsn))
             df = spark.read.schema(schema).parquet(*files)
-        df = df.filter(~F.col("_deleted")).drop("_deleted")
-        if not with_lsn:
-            df = df.drop(*LSN_COLS)
-        return df
+        return df.filter(~F.col("_deleted")).select(
+            *[n for n, _ in self.columns()], *(LSN_COLS if with_lsn else [])
+        )
 
     # ---------------------------------------------------------------- merge
 
@@ -356,12 +333,12 @@ class LakeTable:
         spark: SparkSession,
         updates: DataFrame,
         epoch_id: str,
-        evolve_schema: bool = True,
         mode: str = "cow",
     ) -> dict:
         """Apply one epoch of per-key winner rows (columns: key + payload +
         ``action`` + LSN columns; ≤1 row per key — run ``last_writer``
         upstream).  Returns commit stats; re-delivered epochs are no-ops.
+        Update columns the table lacks are added first (``add_columns``).
 
         ``mode='cow'`` (default): copy-on-write — rewrite every touched
         bucket to ≤1 row/key.  Reads stay merge-free; writes amplify by
@@ -370,7 +347,7 @@ class LakeTable:
         bucket-partitioned DELTA files without reading the base; write
         cost is O(epoch changes) regardless of table size, and
         ``snapshot_df``/``compact`` resolve per-key winners across
-        base + deltas with the same max_by-over-LSN reduce.  The
+        base + deltas with the same ``resolve_lsn`` reduce.  The
         write-optimized regime for uniformly-hot change patterns
         (BENCH/MERGE.md); compact on a cadence to bound read fan-in.
         Modes may be mixed — a CoW epoch folds the touched buckets'
@@ -378,21 +355,18 @@ class LakeTable:
         if epoch_id in self.committed_epochs():
             return {"epoch_id": epoch_id, "skipped": True}
 
-        if evolve_schema:
-            known = {c[0] for c in self.columns()} | set(LSN_COLS) | {"action"}
-            new = [
-                (f.name, f.dataType.simpleString())
-                for f in updates.schema.fields
-                if f.name not in known
-            ]
-            if new:
-                self.add_columns(new)
+        known = {c[0] for c in self.columns()} | set(LSN_COLS) | {"action"}
+        new = [
+            (f.name, f.dataType.simpleString())
+            for f in updates.schema.fields
+            if f.name not in known
+        ]
+        if new:
+            self.add_columns(new)
 
+        # normalize update projection to the (possibly evolved) table
+        # schema; the action becomes the stored tombstone flag here, once
         cols = self.columns()
-        col_names = [n for n, _ in cols]
-        key = self.key_cols
-
-        # normalize update projection to the (possibly evolved) table schema
         upd = updates
         for n, t in cols:
             if n not in upd.columns:
@@ -400,9 +374,8 @@ class LakeTable:
         upd = upd.select(
             *[F.col(n).cast(t).alias(n) for n, t in cols],
             *[F.col(n).cast(t).alias(n) for n, t in LSN_FIELDS],
-            F.col("action"),
-        ).withColumn("bucket", self._bucket_expr())
-        n_buckets = self.schema_doc()["n_buckets"]
+            (F.col("action") == "delete").alias("_deleted"),
+        )
 
         # FUSED single-pass path (round 7, guide §1.2 "remove passes"):
         # MOR epochs and initial loads never read the base, so the epoch
@@ -414,14 +387,9 @@ class LakeTable:
         # lineage job over the update plan.  The CoW-with-base path
         # below still needs `touched` BEFORE it can plan the rewrite, so
         # it keeps the persist + upfront lineage collect.
-        has_base = bool(self.live_files() or self.delta_files())
-        if mode == "mor" or not has_base:
-            merged = (
-                upd.withColumn("_deleted", F.col("action") == "delete")
-                .drop("action")
-            )
+        if mode == "mor" or not (self.live_files() or self.delta_files()):
             epoch_dir = self._write_epoch(
-                merged, epoch_id, max(1, min(n_buckets, 200))
+                upd, epoch_id, self.schema_doc()["n_buckets"]
             )
             # touched buckets = the partition dirs the write produced; the
             # lineage scan reads the LEAF files directly (no partition
@@ -433,130 +401,83 @@ class LakeTable:
                 f for d in bucket_dirs
                 for f in globmod.glob(os.path.join(d, "*.parquet"))
             ]
-            if epoch_files:
-                lineage_rows = (
+            lineage = (
+                self._lineage(
                     spark.read.schema(
                         "log_file string, log_pos bigint, _deleted boolean"
-                    )
-                    .parquet(*epoch_files)
-                    .groupBy("log_file")
-                    .agg(
-                        F.min("log_pos").alias("min_pos"),
-                        F.max("log_pos").alias("max_pos"),
-                        F.count(F.lit(1)).alias("rows"),
-                        F.sum(
-                            F.when(F.col("_deleted"), 1).otherwise(0)
-                        ).alias("deletes"),
-                    )
-                    .collect()
-                )
-            else:  # empty epoch: nothing written, nothing touched
-                lineage_rows = []
-            lineage = {
-                r["log_file"]: {
-                    "min_pos": r["min_pos"],
-                    "max_pos": r["max_pos"],
-                    "rows": r["rows"],
-                    "deletes": r["deletes"],
-                }
-                for r in lineage_rows
-            }
-            return self._finish_commit(
-                epoch_dir, epoch_id, mode, touched, lineage, n_buckets
+                    ).parquet(*epoch_files)
+                )[0]
+                if epoch_files
+                else {}  # empty epoch: nothing written, nothing touched
             )
+        else:
+            # the updates plan (decode → dedup → winners) is consumed
+            # twice below (lineage + touched buckets, merge write) —
+            # persist it or the whole upstream recomputes each time
+            upd = upd.persist()
+            # ONE driver collect serves both bucket pruning and lineage
+            # (A7): per-chunk applied-LSN ranges + the touched buckets
+            lineage, rows = self._lineage(
+                upd, F.collect_set(self._bucket_expr()).alias("buckets")
+            )
+            touched = {b for r in rows for b in r["buckets"]}
+            # a CoW epoch folds any outstanding deltas of its touched
+            # buckets into the base it rewrites; with no current rows
+            # (initial load of these buckets) the updates are already
+            # ≤1 row/key — no merge shuffle, deletes still land as
+            # tombstones for late-epoch safety
+            merged = upd
+            cur_files = self.live_files(touched) + self.delta_files(touched)
+            if cur_files:
+                cur = spark.read.schema(
+                    self.ddl(with_lsn=True, with_tombstone=True)
+                ).parquet(*cur_files)
+                merged = self._resolve(cur.unionByName(upd))
+            epoch_dir = self._write_epoch(merged, epoch_id, len(touched))
+            upd.unpersist(blocking=False)
+        self._finish_commit(epoch_dir, epoch_id, touched, lineage, mode=mode)
+        return {
+            "epoch_id": epoch_id,
+            "skipped": False,
+            "touched_buckets": len(touched),
+            "lineage": lineage,
+        }
 
-        # the updates plan (decode → dedup → winners) is consumed three
-        # times below (touched buckets, lineage, merge write) — persist it
-        # or the whole upstream recomputes each time
-        upd = upd.persist()
-
-        # ONE driver collect serves both bucket pruning and lineage (A7):
-        # per-chunk applied-LSN ranges + the set of touched buckets
-        lineage_rows = (
-            upd.groupBy("log_file")
+    @staticmethod
+    def _lineage(df: DataFrame, *extra) -> tuple[dict, list]:
+        """Per-chunk applied-LSN ranges of an epoch's rows (the manifest's
+        ``lineage``) and any ``extra`` per-chunk aggregates, in one driver
+        collect; returns (lineage, collected rows)."""
+        got = (
+            df.groupBy("log_file")
             .agg(
                 F.min("log_pos").alias("min_pos"),
                 F.max("log_pos").alias("max_pos"),
                 F.count(F.lit(1)).alias("rows"),
                 F.sum(
-                    F.when(F.col("action") == "delete", 1).otherwise(0)
+                    F.when(F.col("_deleted"), 1).otherwise(0)
                 ).alias("deletes"),
-                F.collect_set("bucket").alias("buckets"),
+                *extra,
             )
             .collect()
         )
-        lineage = {
-            r["log_file"]: {
-                "min_pos": r["min_pos"],
-                "max_pos": r["max_pos"],
-                "rows": r["rows"],
-                "deletes": r["deletes"],
-            }
-            for r in lineage_rows
-        }
-        touched: set[int] = set()
-        for r in lineage_rows:
-            touched.update(r["buckets"])
+        keys = ("min_pos", "max_pos", "rows", "deletes")
+        return {r["log_file"]: {k: r[k] for k in keys} for r in got}, got
 
-        # a CoW epoch folds any outstanding deltas of its touched
-        # buckets into the base it rewrites
-        cur_files = self.live_files(touched) + self.delta_files(touched)
-        if cur_files:
-            cur = (
-                spark.read.schema(self.ddl(with_lsn=True, with_tombstone=True))
-                .parquet(*cur_files)
-                .withColumn(
-                    "action",
-                    F.when(F.col("_deleted"), F.lit("delete")).otherwise(
-                        F.lit("keep")
-                    ),
-                )
-                .drop("_deleted")
-                .withColumn("bucket", self._bucket_expr())
-            )
-            combined = cur.unionByName(upd)
-            payload = F.struct(
-                F.col("action").alias("action"),
-                *[F.col(n).alias(n) for n in col_names],
-            )
-            lsn = F.struct(*[F.col(n) for n in LSN_COLS])
-            merged = (
-                combined.groupBy(*key)
-                .agg(F.max_by(payload, lsn).alias("_w"), F.max(lsn).alias("_lsn"))
-                .select(
-                    *[F.col(f"_w.{n}").alias(n) for n in ["action"] + col_names],
-                    *[F.col(f"_lsn.{n}").alias(n) for n in LSN_COLS],
-                )
-                .withColumn("_deleted", F.col("action") == "delete")
-                .drop("action")
-                .withColumn("bucket", self._bucket_expr())
-            )
-        else:
-            # empty target (initial load): updates are already ≤1 row/key
-            # (last_writer upstream) — skip the merge shuffle entirely;
-            # deletes still land as tombstones for late-epoch safety
-            merged = (
-                upd.withColumn("_deleted", F.col("action") == "delete")
-                .drop("action")
-            )
-
-        epoch_dir = self._write_epoch(
-            merged, epoch_id, max(1, min(len(touched), 200))
-        )
-        upd.unpersist(blocking=False)
-        return self._finish_commit(
-            epoch_dir, epoch_id, mode, touched, lineage, n_buckets
-        )
-
-    def _write_epoch(self, merged, epoch_id: str, n_parts: int) -> str:
-        """Write one epoch's merged rows bucket-partitioned; returns the
-        epoch directory."""
+    def _write_epoch(
+        self, rows: DataFrame, epoch_id: str, n_buckets: int
+    ) -> str:
+        """Write one epoch's rows in the stored column order, hash-bucketed
+        into ``bucket=K`` partitions (one write task per bucket it may
+        touch, at most 200); returns the epoch directory."""
         safe_epoch = "".join(
             ch if ch.isalnum() or ch in "-_." else "_" for ch in epoch_id
         )
         epoch_dir = os.path.join(self.path, "data", f"ep={safe_epoch}")
+        stored = [n for n, _ in self.columns()] + LSN_COLS + ["_deleted"]
         (
-            merged.repartition(n_parts, "bucket")
+            rows.select(*stored, self._bucket_expr().alias("bucket"))
+            .repartition(max(1, min(n_buckets, 200)), "bucket")
             .write.mode("overwrite")
             .partitionBy("bucket")
             .parquet(epoch_dir)
@@ -567,12 +488,14 @@ class LakeTable:
         self,
         epoch_dir: str,
         epoch_id: str,
-        mode: str,
         touched: set[int],
         lineage: dict,
-        n_buckets: int,
-    ) -> dict:
-        """Fold the written epoch files into the manifest and commit."""
+        **fields,
+    ) -> None:
+        """Fold a written epoch into the manifest and commit it.  A MOR
+        epoch (``mode='mor'``) appends its files as deltas; a CoW epoch or
+        a compaction replaces the base files of its ``touched`` buckets
+        and folds their deltas.  ``fields`` are extra manifest keys."""
         new_bucket_files: dict[str, list[str]] = {}
         for bdir in globmod.glob(os.path.join(epoch_dir, "bucket=*")):
             b = bdir.rsplit("=", 1)[1]
@@ -583,32 +506,26 @@ class LakeTable:
         last = self.last_commit()
         buckets = dict(last["buckets"]) if last else {}
         delta_buckets = dict(last.get("delta_buckets", {})) if last else {}
-        if mode == "mor":
+        if fields.get("mode") == "mor":
             for sb, fs in new_bucket_files.items():
                 delta_buckets[sb] = delta_buckets.get(sb, []) + fs
         else:
-            for b in range(n_buckets):
+            for b in sorted(touched):
                 sb = str(b)
-                if b in touched:
-                    buckets[sb] = new_bucket_files.get(sb, [])
-                    delta_buckets.pop(sb, None)  # folded into the base
-        doc = {
-            "epoch_id": epoch_id,
-            "schema_version": self.schema_doc()["version"],
-            "buckets": buckets,
-            "delta_buckets": delta_buckets,
-            "lineage": lineage,
-            "touched_buckets": sorted(touched),
-            "mode": mode,
-            "wall_time": time.time(),
-        }
-        self._commit(doc)
-        return {
-            "epoch_id": epoch_id,
-            "skipped": False,
-            "touched_buckets": len(touched),
-            "lineage": lineage,
-        }
+                buckets[sb] = new_bucket_files.get(sb, [])
+                delta_buckets.pop(sb, None)  # folded into the base
+        self._commit(
+            {
+                "epoch_id": epoch_id,
+                "schema_version": self.schema_doc()["version"],
+                "buckets": buckets,
+                "delta_buckets": delta_buckets,
+                "lineage": lineage,
+                "touched_buckets": sorted(touched),
+                **fields,
+                "wall_time": time.time(),
+            }
+        )
 
     # ---------------------------------------------------------- maintenance
 
@@ -679,23 +596,9 @@ class LakeTable:
         if deltas:
             # fold outstanding MOR deltas: resolve per-key winners with
             # the same reduce snapshot_df uses before rewriting the base
-            cols = [n for n, _ in self.columns()]
-            payload = F.struct(
-                F.col("_deleted").alias("_deleted"),
-                *[F.col(n).alias(n) for n in cols],
-            )
-            lsn = F.struct(*[F.col(n) for n in LSN_COLS])
-            df = (
-                df.groupBy(*self.key_cols)
-                .agg(F.max_by(payload, lsn).alias("_w"), F.max(lsn).alias("_lsn"))
-                .select(
-                    *[F.col(f"_w.{n}").alias(n) for n in ["_deleted"] + cols],
-                    *[F.col(f"_lsn.{n}").alias(n) for n in LSN_COLS],
-                )
-            )
+            df = self._resolve(df)
         if purge_tombstones:
             df = df.filter(~F.col("_deleted"))
-        df = df.withColumn("bucket", self._bucket_expr())
         n_buckets = self.schema_doc()["n_buckets"]
         if self._next_seq is None:
             self._next_seq = len(self.commits()) + 1
@@ -703,38 +606,14 @@ class LakeTable:
             set(range(n_buckets)) if buckets is None else {int(b) for b in buckets}
         )
         epoch_id = f"compact-{self._next_seq:07d}"
-        epoch_dir = os.path.join(self.path, "data", f"ep={epoch_id}")
-        (
-            df.repartition(max(1, min(len(sel), 200)), "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(epoch_dir)
-        )
-        new_bucket_files: dict[str, list[str]] = {}
-        for bdir in globmod.glob(os.path.join(epoch_dir, "bucket=*")):
-            b = bdir.rsplit("=", 1)[1]
-            new_bucket_files[b] = sorted(
-                globmod.glob(os.path.join(bdir, "*.parquet"))
-            )
-        last = self.last_commit()
-        bmap = dict(last["buckets"]) if last else {}
-        dmap = dict(last.get("delta_buckets", {})) if last else {}
-        for b in sel:
-            sb = str(b)
-            bmap[sb] = new_bucket_files.get(sb, [])
-            dmap.pop(sb, None)  # selected buckets' deltas are folded
-        self._commit(
-            {
-                "epoch_id": epoch_id,
-                "schema_version": self.schema_doc()["version"],
-                "buckets": bmap,
-                "delta_buckets": dmap,
-                "lineage": (last or {}).get("lineage", {}),
-                "touched_buckets": sorted(sel),
-                "compaction": True,
-                "purged_tombstones": purge_tombstones,
-                "wall_time": time.time(),
-            }
+        epoch_dir = self._write_epoch(df, epoch_id, len(sel))
+        self._finish_commit(
+            epoch_dir,
+            epoch_id,
+            sel,
+            (self.last_commit() or {}).get("lineage", {}),
+            compaction=True,
+            purged_tombstones=purge_tombstones,
         )
         stats = {"epoch_id": epoch_id, "skipped": False}
         if vacuum_after:

@@ -71,38 +71,33 @@ save("dedup_last_writer",
 
 # q3 apply_e2e: the two heavy jobs of replay_batch's single epoch —
 # (a) winners materialization, (b) the merged write input
-from mysql_binlog_spark.streaming.replay import _epoch_winners  # noqa: E402
+from mysql_binlog_spark.streaming.replay import prepare_epoch  # noqa: E402
 from mysql_binlog_spark.table import LakeTable  # noqa: E402
 import tempfile  # noqa: E402
 
 lake = tempfile.mkdtemp(prefix="mbs_plan_lake_")
 t = LakeTable.create(lake, IMAGE_COLS[:6], ["conv_id", "turn_idx"], n_buckets=64)
-from mysql_binlog_spark.streaming.replay import _PRUNED_META  # noqa: E402
-
-dec3 = read_binlog(spark, glob, image_cols=IMAGE_COLS,
-                   include={("app", "transcripts")},
-                   before_mode="delete_only",
-                   null_cols=_PRUNED_META)  # mirrors replay prepare()
-w = _epoch_winners(t, dec3, [("app", "transcripts")],
-                   [n for n, _ in IMAGE_COLS])
+w = prepare_epoch(spark, t, glob, IMAGE_COLS,
+                  include=[("app", "transcripts")])
 save("apply_winners", w)
 
 # the fused single-pass epoch write input (round 7): winners normalized to
-# the table schema + bucket + tombstone flag — the exact DataFrame
-# merge_into's fused path writes (partitionBy bucket) in ONE job
+# the table schema + tombstone flag, then the stored column order + bucket
+# — the exact DataFrame merge_into's fused path writes (partitionBy bucket)
+# in ONE job
+from mysql_binlog_spark.table import LSN_FIELDS  # noqa: E402
+
 cols6 = t.columns()
 upd = w
 for nm, ty in cols6:
     if nm not in upd.columns:
         upd = upd.withColumn(nm, F.lit(None).cast(ty))
-from mysql_binlog_spark.table import LSN_FIELDS  # noqa: E402
-
-upd = upd.select(
+merged = upd.select(
     *[F.col(nm).cast(ty).alias(nm) for nm, ty in cols6],
     *[F.col(nm).cast(ty).alias(nm) for nm, ty in LSN_FIELDS],
-    F.col("action"),
-).withColumn("bucket", t._bucket_expr())
-merged = upd.withColumn("_deleted", F.col("action") == "delete").drop("action")
+    (F.col("action") == "delete").alias("_deleted"),
+    t._bucket_expr().alias("bucket"),
+)
 save("apply_fused_write", merged.repartition(64, "bucket"))
 
 # q4 salted_last_writer

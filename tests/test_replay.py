@@ -325,10 +325,12 @@ def test_null_cols_emission_contract(spark, chunks):
     full = read_binlog(spark, glob, include=inc)
     pruned = read_binlog(spark, glob, include=inc, null_cols=NULLABLE_META)
     assert full.schema == pruned.schema
-    counts = pruned.select(
-        [F.count(F.col(c)).alias(c) for c in sorted(NULLABLE_META)]
-    ).collect()[0]
+    meta_counts = [F.count(F.col(c)).alias(c) for c in sorted(NULLABLE_META)]
+    before = full.select(meta_counts).collect()[0]
+    counts = pruned.select(meta_counts).collect()[0]
     for c in NULLABLE_META:
+        # the fixture writes GTID frames, so every column starts populated
+        assert before[c] > 0, f"{c} already all-NULL before pruning"
         assert counts[c] == 0, f"{c} not nulled"
     keep = [c for c in full.columns if c not in NULLABLE_META]
     a, b = full.select(keep), pruned.select(keep)

@@ -262,9 +262,12 @@ def test_mor_merge_resolution_and_compaction(spark):
     assert snap() == [("a", 1), ("b", 5), ("c", 4)]
 
 
-def test_mor_exactly_once_and_old_epoch_protection(spark):
+@pytest.mark.parametrize("late_mode", ["mor", "cow"])
+def test_mor_exactly_once_and_old_epoch_protection(spark, late_mode):
     """Re-delivered MOR epochs are no-ops, and a tombstone in a delta
-    still beats an older-LSN row replayed after it (no resurrection)."""
+    still beats an older-LSN row replayed after it (no resurrection) —
+    whether the late epoch lands as another delta or as a CoW rewrite
+    that folds the delta tombstone into the base."""
     t = LakeTable.create(
         tempfile.mkdtemp(prefix="mbs_mor2_"),
         columns=[("k", "string"), ("v", "int")],
@@ -275,7 +278,7 @@ def test_mor_exactly_once_and_old_epoch_protection(spark):
     t.merge_into(spark, _updates(spark, 9, ["a"], "delete"), "e9", mode="mor")
     assert t.merge_into(spark, _updates(spark, 9, ["a"]), "e9")["skipped"]
     # an OLDER-LSN re-insert of the deleted key loses to the tombstone
-    t.merge_into(spark, _updates(spark, 2, ["a"]), "e2", mode="mor")
+    t.merge_into(spark, _updates(spark, 2, ["a"]), "e2", mode=late_mode)
     got = sorted((r.k, r.v) for r in t.snapshot_df(spark).collect())
     assert got == [("b", 1)]
 
